@@ -409,9 +409,10 @@ def distance_join(points: DataFrame, radius_deg: float,
     keyed on cells, AQE skew-split for hot cells, candidate count linear in
     sum-of-neighborhood sizes."""
     if not (0.0 < float(radius_deg) <= 90.0):
-        # > 90 has no covering lat cell (the coarsest lat cell spans 90
-        # degrees) so the 1-ring guarantee breaks at EVERY res; <= 0 (or
-        # NaN) would silently return no pairs at the finest grid.
+        # The cap at 90 is a deliberate API restriction, not a correctness
+        # need: at res 0 the grid is one cell, so a larger radius would
+        # degenerate to a correct but all-pairs join + exact refine.
+        # <= 0 (or NaN) would silently return no pairs at the finest grid.
         raise ValueError(
             f"radius_deg must be in (0, 90]: got {radius_deg}")
     if res is None:

@@ -846,11 +846,12 @@ def _binaryfile_path_route(tiffs: DataFrame) -> bool:
 
 
 def _read_local_file(path: str) -> bytes:
-    """Read a file:-scheme URI (or plain path) from the worker-local fs."""
-    if path.startswith("file:"):
-        from urllib.parse import unquote, urlparse
-        path = unquote(urlparse(path).path)
-    with open(path, "rb") as f:
+    """Read a binaryFile `path` value (or plain path) from the worker-local
+    fs. Spark renders it with Hadoop's Path.toString, which does NOT
+    percent-encode (`a b.tif` -> `file:/d/a b.tif`, `a%20b.tif` ->
+    `file:/d/a%20b.tif`), so only the scheme is stripped: URL-decoding
+    would turn `%20` into a space and cut the name at `#` or `?`."""
+    with open(path.removeprefix("file:"), "rb") as f:
         return f.read()
 
 

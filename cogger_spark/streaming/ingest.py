@@ -176,7 +176,10 @@ def stream_upsert_table(spark: SparkSession, in_dir: str, table_path: str,
     arrival order within the batch (well-defined when each micro-batch is
     one file; across files in one batch, the later source file — by path,
     the file source's listing tiebreak — wins, independent of Spark's
-    split packing)."""
+    split packing). Without `version_col` the cross-file winner is chosen
+    by PATH, not by mtime: when two files in one batch have different
+    mtimes, the file source's own arrival order is mtime-first, so the
+    winner can be the OLDER file. Pass `version_col` for CDC ordering."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
     from ..sources import iceberg_shim as shim

@@ -290,3 +290,36 @@ def test_rewrite_path_route_equivalent_and_guarded(spark, smoke_images,
     # the path-route scan must never read file contents in the JVM
     plan = rewrite_tiffs(tiffs)._jdf.queryExecution().executedPlan().toString()
     assert "ReadSchema: struct<path:string>" in plan, plan
+
+
+def test_rewrite_path_route_reads_escaped_file_names(spark, smoke_images,
+                                                     tmp_path):
+    """binaryFile paths are not percent-encoded, so the path-read route
+    must open `a%20b.tif` and `a b.tif` as named (it used to URL-decode
+    the first into the second and raise FileNotFoundError)."""
+    from cogger_spark.operators.tiling import (
+        _binaryfile_path_route, convert_images, rewrite_tiffs,
+        rewrite_tiffs_to_dir)
+    from cogger_spark.sources.tiffdir import read_tiff_dir
+    from cogger_spark.tiff.codec import rewrite
+    src = spark.read.parquet(smoke_images).limit(2)
+    made = tmp_path / "made"
+    convert_images(src, str(made), tile=512)
+    d = tmp_path / "named"
+    d.mkdir()
+    want = {}
+    for name, f in zip(["a%20b", "a b"], sorted(made.glob("*.tif"))):
+        data = f.read_bytes()
+        (d / f"{name}.tif").write_bytes(data)
+        want[name] = rewrite(data)
+    assert want["a%20b"] != want["a b"]
+    tiffs = read_tiff_dir(spark, str(d))
+    assert _binaryfile_path_route(tiffs) is True
+
+    got = {r.image_id: bytes(r.cog) for r in rewrite_tiffs(tiffs).collect()}
+    assert got == want
+    out = tmp_path / "out"
+    rows = rewrite_tiffs_to_dir(tiffs, str(out)).collect()
+    assert sorted(r.image_id for r in rows) == sorted(want)
+    for name, cog in want.items():
+        assert (out / f"{name}.tif").read_bytes() == cog
